@@ -84,8 +84,25 @@ def derive_decode_task_bytes(spark) -> int:
 
     v = os.environ.get("SPARK_GRAFT_DECODE_TASK_BYTES")
     if v:
-        return max(1, int(v))
+        try:
+            return max(1, int(v))
+        except ValueError:
+            raise ValueError(
+                "SPARK_GRAFT_DECODE_TASK_BYTES must be an integer byte "
+                f"count, got {v!r}"
+            ) from None
     return 8 << 20
+
+
+def aqe_enabled(spark) -> bool:
+    """spark.sql.adaptive.enabled, read case-insensitively and ignoring
+    surrounding whitespace, as Spark parses booleans. An unreadable conf
+    counts as enabled, Spark's default."""
+    try:
+        v = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    except Exception:  # noqa: BLE001
+        return True
+    return str(v).strip().lower() == "true"
 
 
 def bypass_merge_threshold(spark) -> int:

@@ -1,13 +1,16 @@
 """FSST-style symbol-table string compression, fully vectorized.
 
 Implements the scheme from "FSST: Fast Random Access String Compression"
-(Boncz, Neumann, Leis — VLDB 2020; see PAPERS.md): a table of ≤255
-symbols of 1–8 bytes each; output is a byte stream where each byte is
-either a symbol code (0–254) or the escape byte 255 followed by one
-literal byte.
+(Boncz, Neumann, Leis — VLDB 2020; not listed in PAPERS.md, whose
+nearest entry is "Adaptive Compression for Fast Scans on String
+Columns", SIGMOD 2021): a table of ≤255 symbols of 1–8 bytes each;
+output is a byte stream where each byte is either a symbol code
+(0–254) or the escape byte 255 followed by one literal byte.
 
 Everything is numpy-vectorized:
 
+* build — a greedy count×(len-1) symbol selection over a bounded
+  sample (SAMPLE_CAP bytes), one ``np.unique`` per symbol length.
 * encode — greedy tokenization is CELL-BLOCKED: matches may not cross
   32-byte cell boundaries, so all cells tokenize independently and the
   greedy walk runs in LOCKSTEP across every cell at once. Matching is
@@ -23,17 +26,12 @@ Everything is numpy-vectorized:
   escape/literal), then symbol bytes are scattered with ragged-arange
   gathers from a fixed 8-byte-stride symbol buffer.
 
-The symbol table is built greedily from a bounded sample (the only
-Python loop, capped at SAMPLE_CAP bytes) scoring count×(len-1).
-
 This is the string-side analogue of the reference's zstd block
 compression (reference src/sink.rs:130-135), but per-column and
 random-access-friendly.
 """
 
 from __future__ import annotations
-
-from collections import Counter
 
 import numpy as np
 
@@ -44,36 +42,52 @@ SAMPLE_CAP = 1 << 15  # 32 KiB symbol-learning sample
 
 
 def build_symbol_table(sample: bytes, max_symbols: int = MAX_SYMBOLS) -> list[bytes]:
-    """Greedy frequency × (len-1) symbol selection over a bounded sample."""
-    sample = sample[:SAMPLE_CAP]
+    """Greedy frequency × (len-1) symbol selection over a bounded sample.
+
+    Every 2–8-byte window (stride 2 past 8 KiB) is keyed as a big-endian,
+    zero-padded uint64, so one ``np.unique`` per length counts them, and
+    ordering by (key, len) is bytes order — a prefix sorts first.
+    """
+    sample = bytes(sample[:SAMPLE_CAP])
     n = len(sample)
     if n == 0:
         return []
-    counts: Counter = Counter()
-    mv = memoryview(sample)
-    for k in range(2, MAX_SYM_LEN + 1):
-        if n < k:
-            break
-        step = 1 if n <= 8192 else 2  # stride sampling keeps the loop bounded
-        for i in range(0, n - k + 1, step):
-            counts[bytes(mv[i : i + k])] += 1
-    # gain of a multi-byte symbol ≈ (len-1) bytes saved per occurrence
-    scored = [(cnt * (len(s) - 1), s) for s, cnt in counts.items() if cnt > 1]
-    scored.sort(key=lambda t: (-t[0], t[1]))
+    buf = np.frombuffer(sample + bytes(MAX_SYM_LEN - 1), dtype=np.uint8)
+    # key8[i] = bytes i..i+7 (zero past the end), big-endian
+    key8 = np.ndarray((n,), dtype=">u8", buffer=buf, strides=(1,)).astype(np.uint64)
+    step = 1 if n <= 8192 else 2  # stride sampling keeps the count bounded
+    keys = [np.zeros(0, np.uint64)]
+    lens, gains = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for k in range(2, min(n, MAX_SYM_LEN) + 1):
+        top_k = np.uint64(((1 << (8 * k)) - 1) << (8 * (MAX_SYM_LEN - k)))
+        uk, cnt = np.unique(key8[: n - k + 1 : step] & top_k, return_counts=True)
+        multi = cnt > 1
+        keys.append(uk[multi])
+        lens.append(np.full(int(multi.sum()), k, dtype=np.int64))
+        # gain of a multi-byte symbol ≈ (len-1) bytes saved per occurrence
+        gains.append(cnt[multi].astype(np.int64) * (k - 1))
+    keys, lens, gains = (np.concatenate(a) for a in (keys, lens, gains))
+    order = np.lexsort((lens, keys, -gains))
+    keys, lens, gains = keys[order], lens[order], gains[order]
     # cap distinct multi-byte lengths to the 3 most productive: encode
     # matching costs one vector pass per distinct length, and the tail
-    # lengths contribute little coverage
-    by_len_gain: dict[int, int] = {}
-    for gain, s in scored[:512]:
-        by_len_gain[len(s)] = by_len_gain.get(len(s), 0) + gain
-    kept_lengths = set(sorted(by_len_gain, key=by_len_gain.get, reverse=True)[:3])
-    scored = [(g, s) for g, s in scored if len(s) in kept_lengths]
-    table = [s for _, s in scored[: max_symbols - 64]]
+    # lengths contribute little coverage. Ties keep first-seen order.
+    head_lens, head_first = np.unique(lens[:512], return_index=True)
+    head_gain = np.bincount(lens[:512], weights=gains[:512])[head_lens]
+    kept = head_lens[np.lexsort((head_first, -head_gain))][:3]
+    sel = np.flatnonzero(np.isin(lens, kept))[: max_symbols - 64]
+    table = [
+        key.to_bytes(MAX_SYM_LEN, "big")[:k]
+        for key, k in zip(keys[sel].tolist(), lens[sel].tolist())
+    ]
     # single-byte symbols for the most frequent bytes: turns would-be
-    # 2-byte escapes into 1-byte codes
-    byte_counts = Counter(sample)
-    for b, _ in byte_counts.most_common(min(64, max_symbols - len(table))):
-        table.append(bytes([b]))
+    # 2-byte escapes into 1-byte codes (ties in first-seen order)
+    m = min(64, max_symbols - len(table))
+    if m > 0:
+        byte_vals, byte_first = np.unique(buf[:n], return_index=True)
+        byte_cnt = np.bincount(buf[:n], minlength=256)[byte_vals]
+        top = byte_vals[np.lexsort((byte_first, -byte_cnt))][:m]
+        table.extend(bytes([b]) for b in top.tolist())
     return table[:max_symbols]
 
 

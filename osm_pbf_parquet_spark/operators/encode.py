@@ -118,13 +118,6 @@ def _exchange_buckets(spark, num_partitions: int) -> int:
 SPREAD_MIN_BYTES_PER_PID = 16 << 20
 
 
-def _aqe_enabled(spark) -> bool:
-    try:
-        return spark.conf.get("spark.sql.adaptive.enabled", "true") == "true"
-    except Exception:  # noqa: BLE001
-        return True
-
-
 def _plan_size_estimate(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate (exact for cached
     relations and file scans, heuristic after transforms); None when
@@ -355,7 +348,9 @@ def encode_dataframe(
         # on encode_lineitem). Rows of one pid always land in exactly
         # one task: AQE coalescing merges whole reducer buckets, never
         # splits one. Fixed-N spread is the non-AQE fallback.
-        if _aqe_enabled(df.sparkSession):
+        from ..config import aqe_enabled
+
+        if aqe_enabled(df.sparkSession):
             routed = with_pid.repartition(PID_COL)
         else:
             routed = with_pid.repartition(

@@ -5,9 +5,12 @@ nested value equality), run per-kernel on adversarial arrays.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from osm_pbf_parquet_spark.functions.codecs import (
     choose_codec,
@@ -15,6 +18,7 @@ from osm_pbf_parquet_spark.functions.codecs import (
     codecs_for,
     decode_array,
     encode_array,
+    fsst,
 )
 
 RNG = np.random.default_rng(42)
@@ -227,3 +231,98 @@ def test_auto_never_larger_than_plain_by_much():
             _, _, auto_payload = encode_array(arr)
             _, _, plain_payload = encode_array(arr, "plain")
             assert len(auto_payload) <= len(plain_payload) * 1.25 + 4096
+
+
+# ---- FSST symbol-table build: vectorized kernel == reference loop ----
+
+def _oracle_symbol_table(sample: bytes, max_symbols: int = 255) -> list[bytes]:
+    """The per-position Counter loop the numpy build must reproduce."""
+    sample = sample[: fsst.SAMPLE_CAP]
+    n = len(sample)
+    if n == 0:
+        return []
+    counts: Counter = Counter()
+    mv = memoryview(sample)
+    for k in range(2, fsst.MAX_SYM_LEN + 1):
+        if n < k:
+            break
+        step = 1 if n <= 8192 else 2
+        for i in range(0, n - k + 1, step):
+            counts[bytes(mv[i : i + k])] += 1
+    scored = [(cnt * (len(s) - 1), s) for s, cnt in counts.items() if cnt > 1]
+    scored.sort(key=lambda t: (-t[0], t[1]))
+    by_len_gain: dict[int, int] = {}
+    for gain, s in scored[:512]:
+        by_len_gain[len(s)] = by_len_gain.get(len(s), 0) + gain
+    kept_lengths = set(sorted(by_len_gain, key=by_len_gain.get, reverse=True)[:3])
+    scored = [(g, s) for g, s in scored if len(s) in kept_lengths]
+    table = [s for _, s in scored[: max_symbols - 64]]
+    byte_counts = Counter(sample)
+    for b, _ in byte_counts.most_common(min(64, max_symbols - len(table))):
+        table.append(bytes([b]))
+    return table[:max_symbols]
+
+
+def _seeded_bytes(n: int, alphabet: int, seed: int) -> bytes:
+    rng = np.random.default_rng(seed)
+    return rng.integers(0, alphabet, n, dtype=np.uint8).tobytes()
+
+
+def _fsst_edge_samples() -> list[bytes]:
+    # a*9 and the abba sample tie two lengths' summed gains at the
+    # top-3 cut, so the length order must be first-seen
+    out = [b"", b"a", b"ab", b"aa", b"aaa", b"a" * 9, b"abbbaabbbabbba",
+           b"ab\x00ab\x00ab\x00", b"\xff" * 300, b"\xff" * 9000,
+           bytes(range(256)) * 3]
+    for n in (7, 8, 9, 8191, 8192, 8193, fsst.SAMPLE_CAP + 100):
+        for alphabet in (2, 26, 256):
+            out.append(_seeded_bytes(n, alphabet, seed=n))
+    return out
+
+
+def _pages_columns() -> dict[str, pa.Array]:
+    from osm_pbf_parquet_spark.sources.pages import generate_pages
+
+    t = generate_pages(1500)
+    return {c: t.column(c).combine_chunks() for c in ("url", "html", "text")}
+
+
+def _flat_bytes(arr: pa.Array) -> bytes:
+    offs = arr.buffers()[1]
+    lo, hi = np.frombuffer(offs, dtype=np.int32)[[arr.offset, arr.offset + len(arr)]]
+    return arr.buffers()[2].to_pybytes()[lo:hi]
+
+
+def test_fsst_symbol_table_matches_oracle_on_edge_cases():
+    for s in _fsst_edge_samples():
+        # max_symbols < 64 exercises the oracle's negative-slice rules
+        for max_symbols in (255, 100, 10, 0) if len(s) < 1000 else (255,):
+            assert fsst.build_symbol_table(s, max_symbols) == _oracle_symbol_table(
+                s, max_symbols), (len(s), max_symbols)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.one_of(
+    st.binary(max_size=40_000),
+    # full-length samples over small alphabets: many repeated windows
+    # and gain ties, past the stride-2 and SAMPLE_CAP cut-offs
+    st.builds(_seeded_bytes, st.integers(0, 40_000), st.integers(1, 256),
+              st.integers(0, 2**32 - 1)),
+))
+def test_fsst_symbol_table_matches_oracle_any(sample):
+    assert fsst.build_symbol_table(sample) == _oracle_symbol_table(sample)
+
+
+def test_fsst_symbol_table_matches_oracle_on_pages():
+    for name, arr in _pages_columns().items():
+        data = _flat_bytes(arr)
+        for off, ln in ((0, 300), (0, 16384), (5000, 8192), (1000, 40000)):
+            s = data[off : off + ln]
+            assert fsst.build_symbol_table(s) == _oracle_symbol_table(s), (name, off, ln)
+
+
+def test_fsst_oracle_table_gives_same_codec_choice(monkeypatch):
+    cols = _pages_columns()
+    chosen = {c: choose_codec(a, classify(a.type)) for c, a in cols.items()}
+    monkeypatch.setattr(fsst, "build_symbol_table", _oracle_symbol_table)
+    assert chosen == {c: choose_codec(a, classify(a.type)) for c, a in cols.items()}

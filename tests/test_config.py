@@ -66,3 +66,46 @@ def test_zstd_level_through_spark(spark, sf_dir):
         dec = decode_dataframe(ch, src.schema)
         assert dec.count() == src.count()
     assert sizes[19] <= sizes[1]
+
+
+def test_decode_task_bytes_env_parse(monkeypatch):
+    from osm_pbf_parquet_spark.config import derive_decode_task_bytes
+
+    monkeypatch.delenv("SPARK_GRAFT_DECODE_TASK_BYTES", raising=False)
+    assert derive_decode_task_bytes(None) == 8 << 20
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_TASK_BYTES", "4194304")
+    assert derive_decode_task_bytes(None) == 4 << 20
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_TASK_BYTES", "8MB")
+    with pytest.raises(ValueError, match=r"SPARK_GRAFT_DECODE_TASK_BYTES.*'8MB'"):
+        derive_decode_task_bytes(None)
+
+
+class _Conf:
+    def __init__(self, value):
+        self.value = value
+
+    def get(self, key, default=None):
+        if isinstance(self.value, Exception):
+            raise self.value
+        return default if self.value is None else self.value
+
+
+class _Session:
+    def __init__(self, value):
+        self.conf = _Conf(value)
+
+
+@pytest.mark.parametrize("value,enabled", [
+    (None, True),  # unset: Spark's default
+    ("true", True),
+    ("TRUE", True),
+    (" True ", True),
+    ("false", False),
+    ("FALSE", False),
+    (RuntimeError("conf unavailable"), True),
+])
+def test_aqe_enabled_reads_conf_case_insensitively(value, enabled):
+    from osm_pbf_parquet_spark.config import aqe_enabled
+
+    assert aqe_enabled(_Session(value)) is enabled
+
